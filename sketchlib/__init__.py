@@ -25,6 +25,7 @@ Layering:
 * ``sketchlib.jobs`` — spark-submit entry points.
 """
 
+from ._worker import prune_worker_import_path
 from .ams import AmsSketch  # noqa: F401
 from .bloom import BloomFilter  # noqa: F401
 from .cuckoo import CuckooFilter  # noqa: F401
@@ -37,3 +38,5 @@ from .tdigest import TDigest  # noqa: F401
 from .theta import ThetaSketch  # noqa: F401
 
 __version__ = "0.1.0"
+
+prune_worker_import_path()

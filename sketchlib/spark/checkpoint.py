@@ -42,6 +42,21 @@ from .aggregate import build_partials, merge_partials
 from .skew import tree_merge_partials
 
 
+class CheckpointRunError(RuntimeError):
+    """``SketchCheckpoint.run(parallelism>1)`` raises this once every unit
+    job has finished.  ``failures`` maps each failed unit to its exception;
+    the other units are committed, so a resume re-runs only the failed
+    ones."""
+
+    def __init__(self, failures: dict[str, BaseException]) -> None:
+        self.failures = failures
+        detail = "; ".join(
+            f"{u}: {type(e).__name__}: {(str(e).splitlines() or [''])[0]}"
+            for u, e in failures.items())
+        super().__init__(f"{len(failures)} checkpoint unit(s) failed "
+                         f"[{', '.join(failures)}]: {detail}")
+
+
 class SketchCheckpoint:
     """Manages one checkpointed aggregation: (element_cols, group_cols, spec)
     over a unit-partitioned source."""
@@ -178,15 +193,23 @@ class SketchCheckpoint:
         later unit's scan back-fills executors freed by an earlier unit's
         write tail.  2-3 in flight is plenty; the returned ``records`` list
         stays in ``units`` order, and manifest-line order (which may
-        interleave) carries no semantics — completion is set-based."""
+        interleave) carries no semantics — completion is set-based.  A
+        failed unit does not stop the others: once all have finished, one
+        :class:`CheckpointRunError` names every failed unit."""
         self._check_resume_config()
         done = self.completed_units()
         todo = [u for u in units if str(u) not in done]
         if parallelism > 1 and len(todo) > 1:
             with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                futs = [pool.submit(self.run_unit, source(u), str(u))
-                        for u in todo]
-                records = [f.result() for f in futs]
+                futs = [(str(u), pool.submit(
+                    lambda u=u: self.run_unit(source(u), str(u))))
+                    for u in todo]
+            failures = {u: f.exception() for u, f in futs
+                        if f.exception() is not None}
+            if failures:
+                raise CheckpointRunError(failures) from next(
+                    iter(failures.values()))
+            records = [f.result() for _, f in futs]
         else:
             records = [self.run_unit(source(u), str(u)) for u in todo]
         return {"resumed": bool(done), "skipped": len(units) - len(todo),

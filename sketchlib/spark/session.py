@@ -2,9 +2,15 @@
 
 Encodes the settings this repo measured to matter (BENCH/BASELINE.md):
 
-* ``maxPartitionBytes`` 32 MB — mapInArrow tasks pay a fixed ~0.2 s
-  JVM<->Python cost; tasks must carry >= ~300k rows to amortize it, but
-  stay small enough to keep all cores busy at bench scale;
+* ``maxPartitionBytes`` 32 MB — large enough to amortize the fixed cost
+  of a Python-worker task (mapInArrow, pandas UDF), small enough to keep
+  all cores busy at bench scale.  That cost measured ~0.25 s per task,
+  almost all of it PySpark's per-task ``importlib.invalidate_caches()``
+  re-parsing the zip archives on the worker's ``sys.path``, the 5k-member
+  spark-core jar among them; ``sketchlib._worker`` prunes them when
+  sketchlib is imported in a worker.  Since then Spark's "time to
+  initialize Python workers" is 0.11-0.13 s per task, down from
+  0.35-0.45 s (median, 10-row ``pandas_udf``, ``local[4]`` on 4 vCPUs);
 * Arrow ``maxRecordsPerBatch`` 200k — fewer, larger IPC batches;
 * AQE on — coalesces the sketch-blob shuffle and splits stragglers;
 * ``spark.rdd.compress`` on — DISK_ONLY stage boundaries (corpus job)

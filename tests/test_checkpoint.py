@@ -226,3 +226,43 @@ def test_parallel_units_equal_sequential(spark, tmp_path):
     b = {r["__g"] if "__g" in r else 0: bytes(r["sketch"])
          for r in par.result(spark).collect()}
     assert a == b
+
+
+def test_parallel_failures_name_every_unit_and_resume(spark, tmp_path):
+    """Two of four units fail under run(parallelism=2): every unit still
+    runs, one error names both failures, and a resume re-runs only them."""
+    from pyspark.sql import functions as F
+
+    from sketchlib.spark.checkpoint import CheckpointRunError
+
+    df = spark.createDataFrame(
+        [(i, f"u{i % 13}", f"d{i % 4}") for i in range(400)],
+        "id long, url string, day string")
+    units = ["d0", "d1", "d2", "d3"]
+    broken = {"d1", "d3"}
+
+    def src(u):
+        part = df.filter(df.day == u)
+        if u in broken:
+            return part.withColumn(
+                "url", F.raise_error(F.lit(f"unit {u} is broken")).cast("string"))
+        return part
+
+    path = str(tmp_path / "ck")
+    with pytest.raises(CheckpointRunError) as err:
+        SketchCheckpoint(path, HllSpec(p=12), "url").run(
+            spark, src, units, parallelism=2)
+    assert sorted(err.value.failures) == ["d1", "d3"]
+    assert "d1" in str(err.value) and "d3" in str(err.value)
+
+    ck = SketchCheckpoint(path, HllSpec(p=12), "url")
+    assert ck.completed_units() == {"d0", "d2"}
+    res = ck.run(spark, lambda u: df.filter(df.day == u), units,
+                 parallelism=2)
+    assert res["resumed"] and res["skipped"] == 2
+    assert [r["unit"] for r in res["records"]] == ["d1", "d3"]
+
+    whole = SketchCheckpoint(str(tmp_path / "whole"), HllSpec(p=12), "url")
+    whole.run(spark, lambda u: df.filter(df.day == u), units)
+    assert ([bytes(r["sketch"]) for r in ck.result(spark).collect()]
+            == [bytes(r["sketch"]) for r in whole.result(spark).collect()])

@@ -292,3 +292,18 @@ def test_warc_response_bytes_rejects_crlf_in_all_header_values(spark):
                  content_type="text/html\r\nX: y")):
         with pytest.raises(ValueError, match="CR/LF"):
             warc_response_bytes(payload=b"p", **kwargs)
+
+
+def test_read_warc_gzip_truncation_keeps_both_errors(spark, tmp_path):
+    """A .warc.gz truncated mid-member whose recovered prefix ends
+    mid-record fails twice: gzip, then record framing.  parse_error must
+    carry the gzip root cause as well as the structural error."""
+    buf = build_warc(RECS, gzip_records=True)
+    cut = buf[: len(buf) - 37]  # the prefix stops inside record 3
+    (tmp_path / "trunc.warc.gz").write_bytes(cut)
+    bad = read_warc(spark, str(tmp_path)).filter(
+        "parse_error IS NOT NULL").collect()
+    assert len(bad) == 1
+    msg = bad[0]["parse_error"]
+    assert "truncated gzip member" in msg
+    assert "overruns buffer" in msg
