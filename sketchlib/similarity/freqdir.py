@@ -164,11 +164,10 @@ class FrequentDirections:
 
 class FdSpec:
     """Binding for the two-stage aggregation in
-    :mod:`sketchlib.spark.aggregate`: one FD per (group, partition) built in
-    the pandas stream path (``prepare`` returns the (n, d) row matrix; the
-    generic builder's row-indexing composes with 2-D prepared arrays), then
-    blob-merged. No ``prepare_arrow``: rows are float matrices, not hashes,
-    and numpy stacking from Arrow-backed pandas is already the fast path."""
+    :mod:`sketchlib.spark.aggregate`: one FD per (group, partition) built by
+    the per-group stage-1 path (``prepare_arrow``/``prepare`` return the
+    (n, d) row matrix; the builder's row-indexing composes with 2-D
+    prepared arrays), then blob-merged."""
 
     name = "freqdir"
     hash_dedup = False
@@ -184,6 +183,12 @@ class FdSpec:
         if len(element_cols) != 1:
             raise ValueError("FD takes exactly one embedding column")
         return np.stack(pdf[element_cols[0]].to_numpy()).astype(np.float64)
+
+    def prepare_arrow(self, batch, element_cols):
+        if len(element_cols) != 1:
+            raise ValueError("FD takes exactly one embedding column")
+        return np.stack(batch.column(element_cols[0])
+                        .to_numpy(zero_copy_only=False)).astype(np.float64)
 
     def ingest(self, sketch: FrequentDirections, prepared: np.ndarray) -> None:
         sketch.update(prepared)

@@ -29,7 +29,7 @@ RoundRobin -> ``repartition(n)``, Chunked -> ``coalesce(n)``; see
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -91,10 +91,11 @@ def arrow_group_codes(batch, group_cols: Sequence[str]) -> tuple[np.ndarray, tup
     """Per-row group codes + unique-key *column arrays* from Arrow dictionary
     encoding — vectorized factorize, zero per-key Python.
 
-    NULL group keys get a dedicated dictionary slot (mirroring the pandas
-    path's ``factorize(use_na_sentinel=False)``): ``dictionary_encode`` emits
-    null *indices* for null values, which would otherwise cast to INT64_MIN
-    and silently fold the NULL group into an arbitrary real group."""
+    NULL group keys get a dedicated dictionary slot (mirroring the
+    accumulator's ``factorize(use_na_sentinel=False)``):
+    ``dictionary_encode`` emits null *indices* for null values, which would
+    otherwise cast to INT64_MIN and silently fold the NULL group into an
+    arbitrary real group."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -161,8 +162,23 @@ class SpecRepr:
 
 class HllSpec(SpecRepr):
     """Sketch-spec protocol binding :class:`HllSketch` into the two-stage
-    aggregation.  Sibling sketches (bloom/cms/kll/tdigest) implement the same
-    four methods plus ``estimate_fields``."""
+    aggregation.  Every spec (:mod:`sketchlib.spark.specs`,
+    :class:`sketchlib.similarity.freqdir.FdSpec`) provides:
+
+    * ``hash_dedup`` — True for set-semantics sketches, whose stage 1
+      accumulates deduped (group, hash) pairs; False streams every row into
+      one live sketch per group;
+    * ``prepare_arrow(batch, cols)`` — the stage-1 input array from an Arrow
+      record batch (the only batch ingest path);
+    * ``prepare(pdf, cols)`` — the same array from a pandas frame (the
+      streaming state functions);
+    * ``make``, ``ingest``, ``to_bytes``, ``from_bytes``, ``merge``,
+      ``estimate`` and ``estimate_type``;
+    * ``build_from_hashes(unique_hashes, count_additions)`` when
+      ``hash_dedup``.
+
+    Optional fast paths: ``blob_from_hashes`` (serialize a group straight
+    from its sorted unique hashes) and ``fold_blobs`` (wire-level fold)."""
 
     name = "hll"
     #: distinct-counting sketches are a pure function of the *set* of element
@@ -395,12 +411,52 @@ class _PairAccumulator:
                     self.spec.ingest(sk, seg)
                 sk.count_additions = int(adds[c])
             blobs.append(self.spec.to_bytes(sk))
-        if group_cols:
-            out = pd.DataFrame({g: col for g, col in zip(group_cols, self.gkey_cols)})
-        else:
-            out = pd.DataFrame(index=range(len(blobs)))
-        out[sketch_col] = blobs
-        yield out
+        yield _partials_frame(group_cols, self.gkey_cols, blobs, sketch_col)
+
+
+class _GroupSketches:
+    """Stage-1 state for multiplicity-sensitive sketches (CMS, AMS, MG,
+    quantiles, FD): one live sketch per group; per batch the rows are
+    ordered by group code once and each group's slice is ingested
+    vectorized.  Same ``add_batch``/``finalize`` protocol as
+    :class:`_PairAccumulator`."""
+
+    def __init__(self, spec) -> None:
+        self.spec = spec
+        self.sketches: dict[tuple, object] = {}
+
+    def add_batch(self, local_codes: np.ndarray, key_cols: tuple,
+                  prepared: np.ndarray) -> None:
+        keys = _keys_as_tuples(key_cols)
+        order = np.argsort(local_codes, kind="stable")
+        sorted_codes = local_codes[order]
+        starts = np.searchsorted(sorted_codes, np.arange(len(keys)), side="left")
+        ends = np.searchsorted(sorted_codes, np.arange(len(keys)), side="right")
+        for k, s, e in zip(keys, starts.tolist(), ends.tolist()):
+            if s == e:
+                continue
+            sk = self.sketches.get(k)
+            if sk is None:
+                sk = self.sketches[k] = self.spec.make()
+            self.spec.ingest(sk, prepared[order[s:e]])
+
+    def finalize(self, group_cols: Sequence[str], sketch_col: str):
+        if not self.sketches:
+            return
+        key_cols = [list(c) for c in zip(*self.sketches)]
+        blobs = [self.spec.to_bytes(sk) for sk in self.sketches.values()]
+        yield _partials_frame(group_cols, key_cols, blobs, sketch_col)
+
+
+def _partials_frame(group_cols: Sequence[str], key_cols, blobs: list,
+                    sketch_col: str) -> pd.DataFrame:
+    """Stage-1 output: each group's key values, then its blob.  A NULL key in
+    an int64/date column rides here as NaN in a float64 column; the
+    builder's ``from_pandas`` with the explicit Arrow schema turns it back
+    into a typed null."""
+    out = pd.DataFrame(dict(zip(group_cols, key_cols)), index=range(len(blobs)))
+    out[sketch_col] = blobs
+    return out
 
 
 def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
@@ -436,161 +492,54 @@ def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
     out_schema = T.StructType(
         [_group_field(df, g) for g in group_cols] + [T.StructField(sketch_col, T.BinaryType(), False)]
     )
+    dedup = getattr(spec, "hash_dedup", False)
 
-    def _arrow_out_schema():
-        """Arrow schema matching ``out_schema`` — the yielded batches are
-        built from pandas frames, where a NULL key in an int64/date group
-        column surfaces as NaN in a float64 array; from_pandas with an
-        explicit schema converts that back to a typed null."""
+    def build(batches):
+        """The stage-1 builder (mapInArrow): element bytes are hashed
+        straight from Arrow buffers and group keys factorize via dictionary
+        encoding, so strings never materialize as Python objects.
+        Set-semantics specs accumulate deduped (group, hash) pairs; every
+        other spec ingests into one live sketch per group."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        return to_arrow_schema(out_schema)
-
-    def build_arrow(batches):
-        """Arrow-native build (mapInArrow): element bytes are hashed straight
-        from Arrow buffers; group keys factorize via dictionary encoding.
-        Strings never materialize as Python objects — this path is ~3x the
-        row throughput of the pandas path on url-shaped data."""
-        import pyarrow as pa
-
-        pa_schema = _arrow_out_schema()
-        acc = _PairAccumulator(spec)
+        acc = _PairAccumulator(spec) if dedup else _GroupSketches(spec)
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
             mask = None
             for c in element_cols:
                 col = batch.column(c)
                 if col.null_count:
-                    import pyarrow.compute as pc
                     v = pc.is_valid(col)
                     mask = v if mask is None else pc.and_(mask, v)
             if mask is not None:
                 batch = batch.filter(mask)
-                if batch.num_rows == 0:
-                    continue
-            prepared = spec.prepare_arrow(batch, element_cols)
+            if batch.num_rows == 0:
+                continue
             if group_cols:
-                local_codes, key_cols = arrow_group_codes(batch, group_cols)
+                codes, key_cols = arrow_group_codes(batch, group_cols)
             else:
-                local_codes = np.zeros(batch.num_rows, dtype=np.int64)
+                codes = np.zeros(batch.num_rows, dtype=np.int64)
                 key_cols = (np.zeros(1, dtype=np.int64),)
-            acc.add_batch(local_codes, key_cols, prepared)
+            acc.add_batch(codes, key_cols, spec.prepare_arrow(batch, element_cols))
+        pa_schema = to_arrow_schema(out_schema)
         for pdf in acc.finalize(group_cols, sketch_col):
             yield pa.RecordBatch.from_pandas(pdf, schema=pa_schema,
                                              preserve_index=False)
 
-    def build_dedup(batches: Iterable[pd.DataFrame]):
-        """Dedup-able sketches (HLL/Bloom): vectorized pair accumulation;
-        per-group Python cost is one sketch materialization per group per
-        partition, at partition end."""
-        acc = _PairAccumulator(spec)
-        for pdf in batches:
-            pdf = pdf.dropna(subset=element_cols)
-            if pdf.empty:
-                continue
-            prepared = spec.prepare(pdf, element_cols)
-            if group_cols:
-                if len(group_cols) == 1:
-                    local_codes, uniques = pd.factorize(
-                        pdf[group_cols[0]], use_na_sentinel=False)
-                    key_cols = (np.asarray(uniques),)
-                else:
-                    mi = pd.MultiIndex.from_frame(pdf[group_cols])
-                    local_codes, uniques = mi.factorize(use_na_sentinel=False)
-                    key_cols = tuple(np.asarray(uniques.get_level_values(i))
-                                     for i in range(len(group_cols)))
-            else:
-                local_codes = np.zeros(len(pdf), dtype=np.int64)
-                key_cols = (np.zeros(1, dtype=np.int64),)
-            acc.add_batch(np.asarray(local_codes, dtype=np.int64), key_cols, prepared)
-        yield from acc.finalize(group_cols, sketch_col)
-
-    def build_stream_arrow(batches):
-        """Arrow-native streaming build for non-dedup sketches (CMS,
-        t-digest, KLL): one live sketch per group; per batch the rows are
-        ordered by group code once and each group's slice is ingested
-        vectorized."""
-        import pyarrow as pa
-
-        pa_schema = _arrow_out_schema()
-        sketches: dict[tuple, object] = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            mask = None
-            for c in element_cols:
-                col = batch.column(c)
-                if col.null_count:
-                    import pyarrow.compute as pc
-                    v = pc.is_valid(col)
-                    mask = v if mask is None else pc.and_(mask, v)
-            if mask is not None:
-                batch = batch.filter(mask)
-                if batch.num_rows == 0:
-                    continue
-            prepared = spec.prepare_arrow(batch, element_cols)
-            if group_cols:
-                codes, key_cols = arrow_group_codes(batch, group_cols)
-                keys = _keys_as_tuples(key_cols)
-            else:
-                codes = np.zeros(batch.num_rows, dtype=np.int64)
-                keys = [()]
-            order = np.argsort(codes, kind="stable")
-            sorted_codes = codes[order]
-            starts = np.searchsorted(sorted_codes, np.arange(len(keys)), side="left")
-            ends = np.searchsorted(sorted_codes, np.arange(len(keys)), side="right")
-            for k, s, e in zip(keys, starts.tolist(), ends.tolist()):
-                if s == e:
-                    continue
-                sk = sketches.get(k)
-                if sk is None:
-                    sk = spec.make()
-                    sketches[k] = sk
-                spec.ingest(sk, prepared[order[s:e]])
-        if sketches:
-            rows = [list(k) + [spec.to_bytes(s)] for k, s in sketches.items()]
-            pdf = pd.DataFrame(rows, columns=group_cols + [sketch_col])
-            yield pa.RecordBatch.from_pandas(pdf, schema=pa_schema,
-                                             preserve_index=False)
-
-    def build_stream(batches: Iterable[pd.DataFrame]):
-        """Generic streaming path: one live sketch per group, batch-ingested."""
-        sketches: dict[tuple, object] = {}
-        for pdf in batches:
-            pdf = pdf.dropna(subset=element_cols)
-            if pdf.empty:
-                continue
-            prepared = spec.prepare(pdf, element_cols)
-            if group_cols:
-                indices = pdf.groupby(group_cols, sort=False, dropna=False).indices
-                for key, idx in indices.items():
-                    k = key if isinstance(key, tuple) else (key,)
-                    sk = sketches.get(k)
-                    if sk is None:
-                        sk = spec.make()
-                        sketches[k] = sk
-                    spec.ingest(sk, prepared[idx])
-            else:
-                sk = sketches.get(())
-                if sk is None:
-                    sk = spec.make()
-                    sketches[()] = sk
-                spec.ingest(sk, prepared)
-        if sketches:
-            rows = [list(k) + [spec.to_bytes(s)] for k, s in sketches.items()]
-            yield pd.DataFrame(rows, columns=group_cols + [sketch_col])
-
     needed = list(dict.fromkeys(group_cols + element_cols))  # dedupe overlap
-    pruned = df.select(*needed)
-    has_arrow = hasattr(spec, "prepare_arrow")
-    if getattr(spec, "hash_dedup", False):
-        if has_arrow:
-            return pruned.mapInArrow(build_arrow, out_schema)
-        return pruned.mapInPandas(build_dedup, out_schema)
-    if has_arrow:
-        return pruned.mapInArrow(build_stream_arrow, out_schema)
-    return pruned.mapInPandas(build_stream, out_schema)
+    return df.select(*needed).mapInArrow(build, out_schema)
+
+
+def _merge_blobs(spec, blobs):
+    """Object-path fold of serialized partials into one sketch.  An empty
+    group (global agg over zero rows) yields the empty sketch, so
+    COUNT(DISTINCT <empty>) estimates 0 like SQL."""
+    merged = None
+    for b in blobs:
+        sk = spec.from_bytes(bytes(b))
+        merged = sk if merged is None else spec.merge(merged, sk)
+    return merged if merged is not None else spec.make()
 
 
 def merge_blobs_udf(spec) -> Column:
@@ -619,13 +568,7 @@ def merge_blobs_udf(spec) -> Column:
             if fold is not None and len(blobs) > 1:
                 out.append(fold([bytes(b) for b in blobs]))
                 continue
-            merged = None
-            for b in blobs:
-                sk = spec.from_bytes(bytes(b))
-                merged = sk if merged is None else spec.merge(merged, sk)
-            # empty group (global agg over zero rows): emit the empty sketch,
-            # so COUNT(DISTINCT <empty>) estimates 0 like SQL
-            out.append(spec.to_bytes(merged if merged is not None else spec.make()))
+            out.append(spec.to_bytes(_merge_blobs(spec, blobs)))
         return pd.Series(out)
 
     return _merge
@@ -649,22 +592,11 @@ def merge_estimate_udf(spec) -> Column:
     def _merge_estimate(lists: pd.Series) -> pd.Series:
         out = []
         for blobs in lists:
-            if len(blobs) == 0:
-                # empty group (global agg over zero rows): estimate 0
-                out.append(spec.estimate(spec.make()))
-                continue
-            if len(blobs) == 1:
-                out.append(spec.estimate(spec.from_bytes(bytes(blobs[0]))))
-                continue
-            if fold is not None:
+            if fold is not None and len(blobs) > 1:
                 out.append(spec.estimate(
                     spec.from_bytes(fold([bytes(b) for b in blobs]))))
                 continue
-            merged = None
-            for b in blobs:
-                sk = spec.from_bytes(bytes(b))
-                merged = sk if merged is None else spec.merge(merged, sk)
-            out.append(spec.estimate(merged))
+            out.append(spec.estimate(_merge_blobs(spec, blobs)))
         return pd.Series(out)
 
     return _merge_estimate
@@ -678,13 +610,10 @@ def merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
     bit-identical canonical bytes (CardinalityEstimator.cs:615-685)."""
     group_cols = list(group_cols)
     spec = spec or HllSpec()
-    merge = merge_blobs_udf(spec)
-    collected = F.collect_list(sketch_col).alias("__blobs")
-    if group_cols:
-        agged = partials.groupBy(*group_cols).agg(collected)
-    else:
-        agged = partials.agg(collected)
-    return agged.select(*group_cols, merge("__blobs").alias(sketch_col))
+    agged = partials.groupBy(*group_cols).agg(
+        F.collect_list(sketch_col).alias("__blobs"))
+    return agged.select(*group_cols,
+                        merge_blobs_udf(spec)("__blobs").alias(sketch_col))
 
 
 def rollup_sketches(sketch_df: DataFrame, to_group_cols: Sequence[str],
@@ -806,9 +735,8 @@ def distinct_count(df: DataFrame, element_cols, group_cols: Sequence[str] = (),
     # fused merge+estimate: the caller only wants the scalar, so the merged
     # blob never round-trips JVM->Python a second time (merge_estimate_udf)
     partials = build_partials(df, element_cols, group_cols, spec)
-    collected = F.collect_list("sketch").alias("__blobs")
-    agged = (partials.groupBy(*group_cols).agg(collected) if group_cols
-             else partials.agg(collected))
+    agged = partials.groupBy(*group_cols).agg(
+        F.collect_list("sketch").alias("__blobs"))
     return agged.select(*group_cols,
                         merge_estimate_udf(spec)(F.col("__blobs"))
                         .alias(estimate_name))
@@ -853,11 +781,7 @@ def premerge_partials(partials: DataFrame, group_cols: Sequence[str],
     fold = getattr(spec, "fold_blobs", None)
     if fold is None:
         def fold(blobs):  # generic object-path fallback, same semantics
-            merged = None
-            for b in blobs:
-                sk = spec.from_bytes(bytes(b))
-                merged = sk if merged is None else spec.merge(merged, sk)
-            return spec.to_bytes(merged)
+            return spec.to_bytes(_merge_blobs(spec, blobs))
 
     narrowed = partials.select(*group_cols, sketch_col)
     schema = narrowed.schema

@@ -5,7 +5,7 @@ Spark's own ``countMinSketch``-based frequent-items): the CMS alone cannot
 *enumerate* heavy values (it only answers point queries), so stage 1 also
 emits each partition's locally-frequent values as candidates:
 
-* stage 1 (``mapInPandas``, one pass): per (group, partition) a partial CMS
+* stage 1 (``mapInArrow``, one pass): per (group, partition) a partial CMS
   over all values **and** the top ``candidates_per_partition`` values by a
   *bounded* Misra–Gries-style candidate tracker (capacity ``4*n_cand``):
   every batch's per-value weight sums feed the CMS immediately (CMS cells

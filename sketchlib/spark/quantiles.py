@@ -1,7 +1,7 @@
 """Distributed quantile estimation via t-digest / KLL two-stage aggregation.
 
 ``approx_quantiles(df, value_col, probs, group_cols)`` — the sketch-native
-equivalent of ``percentile_approx``: per-group sketch build (mapInPandas
+equivalent of ``percentile_approx``: per-group sketch build (mapInArrow
 partials, streaming), JVM collect_list merge, then one vectorized UDF turning
 each group's blob into an ``array<double>`` of quantile estimates.
 """

@@ -31,7 +31,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .aggregate import merge_blobs_udf
+from .aggregate import HllSpec, merge_blobs_udf, merge_partials
 
 
 def salt_col(df: DataFrame, buckets: int, source_cols: Sequence[str] | None = None):
@@ -66,8 +66,6 @@ def tree_merge_capped(partials: DataFrame, group_cols: Sequence[str] = (),
     Set-level associativity+commutativity of the merge is the only
     requirement; pass ``n_partials`` when the caller already knows P (one
     ``getNumPartitions`` otherwise)."""
-    from .aggregate import HllSpec, merge_blobs_udf
-
     group_cols = list(group_cols)
     spec = spec or HllSpec()
     merge = merge_blobs_udf(spec)
@@ -98,10 +96,7 @@ def tree_merge_capped(partials: DataFrame, group_cols: Sequence[str] = (),
                 .select(*group_cols, merge("__blobs").alias(sketch_col)))
         width = (width + fanout - 1) // fanout
         level += 1
-    collected = F.collect_list(sketch_col).alias("__blobs")
-    agged = (df.groupBy(*group_cols).agg(collected) if group_cols
-             else df.agg(collected))
-    return agged.select(*group_cols, merge("__blobs").alias(sketch_col))
+    return merge_partials(df, group_cols, spec, sketch_col)
 
 
 def tree_merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
@@ -114,8 +109,6 @@ def tree_merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
     Correctness relies only on merge associativity+commutativity, which the
     canonical-bytes tests pin; the result is bit-identical to a flat merge.
     """
-    from .aggregate import HllSpec
-
     group_cols = list(group_cols)
     spec = spec or HllSpec()
     merge = merge_blobs_udf(spec)
@@ -126,9 +119,4 @@ def tree_merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
                 .groupBy(*group_cols, "__salt")
                 .agg(F.collect_list(sketch_col).alias("__blobs"))
                 .select(*group_cols, merge("__blobs").alias(sketch_col)))
-    collected = F.collect_list(sketch_col).alias("__blobs")
-    if group_cols:
-        agged = df.groupBy(*group_cols).agg(collected)
-    else:
-        agged = df.agg(collected)
-    return agged.select(*group_cols, merge("__blobs").alias(sketch_col))
+    return merge_partials(df, group_cols, spec, sketch_col)

@@ -1,9 +1,11 @@
 """Pandas-path vs Arrow-path encoding/hash parity.
 
-build_partials has two stage-1 implementations (mapInPandas and mapInArrow);
-a hash mismatch between them would silently change sketches when specs or
-Spark versions flip the path. Pin byte-level agreement per element type, and
-pin the scalar encodings against the reference's Add overloads."""
+Batch stage 1 (build_partials, mapInArrow) prepares elements with each
+spec's ``prepare_arrow``; the streaming state functions prepare the same
+elements from pandas with ``prepare``.  A mismatch between the two would make
+a streamed sketch differ from the batch-built one over the same rows. Pin
+byte-level agreement per element type and per spec, and pin the scalar
+encodings against the reference's Add overloads."""
 
 import numpy as np
 import pandas as pd
@@ -102,3 +104,47 @@ class TestScalarEncodings:
         assert encode_scalar(1.5) == np.float64(1.5).tobytes()
         with pytest.raises(TypeError):
             encode_scalar(True)
+
+
+def _prepare_cases():
+    """(spec, frame) for every spec: hash specs over each element type and a
+    two-column element, quantile specs over numerics, FD over list<double>.
+    (A timestamp column is not a quantile input on this path: ``prepare``
+    reads epoch-ns from pandas while ``prepare_arrow`` refuses the cast.)"""
+    from sketchlib.similarity.freqdir import FdSpec
+    from sketchlib.spark.aggregate import HllSpec
+    from sketchlib.spark import specs as S
+
+    numeric = {
+        "int32": pd.DataFrame({"a": np.array([0, 1, -1, 2**30], np.int32)}),
+        "int64": pd.DataFrame({"a": np.array([0, 7, -7, 2**40], np.int64)}),
+        "float64": pd.DataFrame({"a": [0.0, -1.5, 3.25, float("inf")]}),
+    }
+    hashed_inputs = dict(numeric, **{
+        "string": pd.DataFrame({"a": ["", "a", "héllo wörld", "x" * 300]}),
+        "timestamp": pd.DataFrame({"a": pd.to_datetime(
+            ["2026-01-01 00:00:00.000000", "2026-01-02 03:04:05.123456"])}),
+        "two_columns": pd.DataFrame({"a": ["x", "y", "x"],
+                                     "b": np.array([1, 1, 2], np.int64)}),
+    })
+    hashed = [HllSpec(), S.BloomSpec(), S.CuckooSpec(), S.CmsSpec(),
+              S.AmsSpec(), S.MgSpec(), S.ThetaSpec(),
+              S.ComboSpec([HllSpec(), S.CmsSpec()])]
+    valued = [S.TDigestSpec(), S.KllSpec(), S.DdSpec()]
+    for specs, inputs in ((hashed, hashed_inputs), (valued, numeric)):
+        for spec in specs:
+            for kind, pdf in inputs.items():
+                yield pytest.param(spec, pdf, id=f"{type(spec).__name__}-{kind}")
+    yield pytest.param(
+        FdSpec(ell=2, d=3),
+        pd.DataFrame({"a": [[1.0, 2.0, 3.0], [0.5, -1.0, 4.0]]}),
+        id="FdSpec-list_double")
+
+
+@pytest.mark.parametrize("spec,pdf", _prepare_cases())
+def test_prepare_matches_prepare_arrow(spec, pdf):
+    cols = list(pdf.columns)
+    want = spec.prepare(pdf, cols)
+    got = spec.prepare_arrow(
+        pa.RecordBatch.from_pandas(pdf, preserve_index=False), cols)
+    assert got.dtype == want.dtype and np.array_equal(got, want)

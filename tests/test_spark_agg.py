@@ -321,3 +321,32 @@ def test_premerge_partials_reduces_rows(spark):
     pre = agg.premerge_partials(exploded, ["g"], agg.HllSpec())
     # ≤ groups × partitions rows out
     assert pre.count() <= 3 * exploded.rdd.getNumPartitions()
+
+
+def _every_spec():
+    """One instance of every spec class, with the element column it reads:
+    hash specs a string, quantile specs a double, FD a list<double>."""
+    from sketchlib.similarity.freqdir import FdSpec
+    from sketchlib.spark import specs as S
+
+    hashed = [HllSpec(), S.BloomSpec(), S.CuckooSpec(), S.CmsSpec(),
+              S.AmsSpec(), S.MgSpec(), S.ThetaSpec(),
+              S.ComboSpec([HllSpec(), S.CmsSpec()])]
+    valued = [S.TDigestSpec(), S.KllSpec(), S.DdSpec()]
+    return ([pytest.param(s, "url", id=type(s).__name__) for s in hashed]
+            + [pytest.param(s, "v", id=type(s).__name__) for s in valued]
+            + [pytest.param(FdSpec(ell=2, d=3), "e", id="FdSpec")])
+
+
+@pytest.mark.parametrize("spec,element_col", _every_spec())
+def test_build_partials_is_one_map_in_arrow(spark, spec, element_col):
+    """Stage 1 has one builder for every spec: a mapInArrow, never a
+    mapInPandas."""
+    rows = [(f"g{i % 3}", f"https://h{i}.example/", float(i),
+             [float(i), 1.0, -float(i)]) for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "g string, url string, v double, e array<double>")
+    partials = build_partials(df, element_col, ["g"], spec)
+    assert {r["g"] for r in partials.collect()} == {"g0", "g1", "g2"}
+    plan = partials._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
